@@ -103,3 +103,78 @@ def test_memo_never_shadows_a_repartitioned_frame(spark, sf_small):
     assert layout._scan_partitions(wide) == 8
     # ...so fan_out_scan is a no-op on it (no spurious exchange)
     assert fan_out_scan(wide, "doc_id", target=8) is wide
+
+
+def test_memo_rekeys_on_split_conf_change(spark, tmp_path):
+    """A runtime change to a split conf must re-probe: the rebuilt
+    frame's analyzed plan (and so its semantic hash) is the same, but
+    its file splits are not."""
+    from optimal_parallel_fp_growth_spark.functions import layout
+
+    p = str(tmp_path / "split")
+    spark.range(0, 20000).repartition(4).write.parquet(p)
+    before = layout._scan_partitions(spark.read.parquet(p))
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "4096")
+    try:
+        after = layout._scan_partitions(spark.read.parquet(p))
+        assert after == spark.read.parquet(p).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(conf, old)
+    assert after > before
+    assert layout._scan_partitions(spark.read.parquet(p)) == before
+
+
+def test_memo_is_thread_safe_across_application_ids():
+    """fan_out_scan runs on any driver thread; at the same time a new
+    session evicts the dead application's entries. Without the lock
+    the eviction scan raised 'dictionary changed size during
+    iteration', or interleaved with an insert and left entries of two
+    applications in the memo."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from optimal_parallel_fp_growth_spark.functions import layout
+
+    def frame(app: str, i: int):
+        plan = SimpleNamespace(semanticHash=lambda: i)
+        qe = SimpleNamespace(analyzed=lambda: plan)
+        return SimpleNamespace(
+            inputFiles=lambda: [f"/data/{i}.parquet"],
+            _jdf=SimpleNamespace(queryExecution=lambda: qe),
+            sparkSession=SimpleNamespace(
+                sparkContext=SimpleNamespace(applicationId=app),
+                conf=SimpleNamespace(get=lambda key, default: None),
+            ),
+            rdd=SimpleNamespace(getNumPartitions=lambda: i % 7 + 1),
+        )
+
+    errors: list[BaseException] = []
+
+    def worker(t: int):
+        try:
+            for i in range(400):
+                app = f"app-{i // 100}"  # the application id changes mid-run
+                n = i * 64 + t
+                assert layout._scan_partitions(frame(app, n)) == n % 7 + 1
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    layout._SCAN_PARTS_MEMO.clear()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+        apps = {k[0] for k in layout._SCAN_PARTS_MEMO}
+        layout._SCAN_PARTS_MEMO.clear()
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(apps) == 1
